@@ -5,13 +5,25 @@ document — outputs are small aggregates by construction. We keep
 those driver-side sinks (with an explicit row cap guarding against
 misuse on raw tables) and add the scale path: one parquet directory
 per table via distributed ``df.write``.
+
+The three bundle sinks run their per-table queries concurrently from
+a driver thread pool of ``min(len(tables), defaultParallelism)``
+threads: each table is a separate small Spark job chain, so one table
+after another leaves most cores idle. Results are assembled in
+``tables`` order, so JSON key order, sheet order and file contents do
+not depend on which query finishes first, and the first failing table
+in that order is the error raised. The tables ``BhtPipeline`` returns
+are cached, so only the first sink of a run evaluates them; the other
+two read them from memory.
 """
 
 from __future__ import annotations
 
 import json
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 
 DEFAULT_ROW_CAP = 1_000_000
@@ -27,6 +39,49 @@ def _capped_pandas(name: str, df: DataFrame, row_cap: int):
     return capped
 
 
+def _map_tables(fn, tables: dict[str, DataFrame]) -> list:
+    """``[fn(name, df) for name, df in tables.items()]``, run from a
+    driver thread pool. Each task is wrapped with
+    ``inheritable_thread_target`` at submit time, so its jobs carry the
+    caller's local properties and tags (job group, scheduler pool); one
+    wrap per task gives each task its own copy of those properties."""
+    items = list(tables.items())
+    if not items:
+        return []
+    workers = min(len(items), items[0][1].sparkSession.sparkContext.defaultParallelism)
+    with ThreadPoolExecutor(max_workers=workers) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(df.sparkSession)(fn), name, df)
+            for name, df in items
+        ]
+        try:
+            return [f.result() for f in futures]
+        except BaseException:
+            for f in futures:
+                f.cancel()
+            raise
+
+
+def _sheet_names(tables: dict[str, DataFrame]) -> list[str]:
+    """Sheet name per table: truncated to Excel's 31-char limit
+    (app.py:596). Two tables whose names truncate to the same sheet
+    (Excel compares sheet names case-insensitively) raise before any
+    table is evaluated."""
+    seen: dict[str, str] = {}
+    names = []
+    for name in tables:
+        sheet = name[:31]
+        other = seen.setdefault(sheet.lower(), name)
+        if other != name:
+            raise ValueError(
+                f"tables '{other}' and '{name}' both map to Excel sheet "
+                f"name '{sheet}' (cut to 31 chars, compared case-insensitively); "
+                "rename one of them"
+            )
+        names.append(sheet)
+    return names
+
+
 def write_excel_bundle(
     tables: dict[str, DataFrame], path: str, row_cap: int = DEFAULT_ROW_CAP
 ) -> None:
@@ -34,6 +89,8 @@ def write_excel_bundle(
     31-char limit (app.py:596). Driver-side by design; uses pandas'
     excel engine when one is installed, else the stdlib fallback
     (io/minixlsx.py)."""
+    sheets = _sheet_names(tables)
+    frames = _map_tables(lambda name, df: _capped_pandas(name, df, row_cap), tables)
     try:
         import pandas as pd
 
@@ -41,33 +98,32 @@ def write_excel_bundle(
     except (ImportError, ValueError):
         from bht_etl_app_spark.io.minixlsx import write_xlsx
 
-        sheets = {}
-        for name, df in tables.items():
-            pdf = _capped_pandas(name, df, row_cap)
-            rows = [
-                [None if (isinstance(v, float) and v != v) else v for v in rec]
-                for rec in pdf.itertuples(index=False, name=None)
-            ]
-            sheets[name[:31]] = (list(pdf.columns), rows)
-        write_xlsx(path, sheets)
+        write_xlsx(path, {
+            sheet: (
+                list(pdf.columns),
+                [
+                    [None if (isinstance(v, float) and v != v) else v for v in rec]
+                    for rec in pdf.itertuples(index=False, name=None)
+                ],
+            )
+            for sheet, pdf in zip(sheets, frames)
+        })
         return
     with writer:
-        for name, df in tables.items():
-            _capped_pandas(name, df, row_cap).to_excel(
-                writer, index=False, sheet_name=name[:31]
-            )
+        for sheet, pdf in zip(sheets, frames):
+            pdf.to_excel(writer, index=False, sheet_name=sheet)
 
 
 def write_json_bundle(
     tables: dict[str, DataFrame], path: str, row_cap: int = DEFAULT_ROW_CAP
 ) -> None:
     """Single JSON document ``{name: [records...]}`` (app.py:607-615)."""
-    bundle = {
-        name: _capped_pandas(name, df, row_cap).to_dict(orient="records")
-        for name, df in tables.items()
-    }
+    records = _map_tables(
+        lambda name, df: _capped_pandas(name, df, row_cap).to_dict(orient="records"),
+        tables,
+    )
     with open(path, "w") as f:
-        json.dump(bundle, f, indent=2, default=str)
+        json.dump(dict(zip(tables, records)), f, indent=2, default=str)
 
 
 def write_parquet_bundle(
@@ -76,8 +132,10 @@ def write_parquet_bundle(
     """Scale sink: one parquet directory per table, written
     distributed. The path a 100 TB pipeline actually uses; Excel/JSON
     stay for the small preview tier."""
-    for name, df in tables.items():
-        df.write.mode(mode).parquet(os.path.join(out_dir, name))
+    _map_tables(
+        lambda name, df: df.write.mode(mode).parquet(os.path.join(out_dir, name)),
+        tables,
+    )
 
 
 def write_table(

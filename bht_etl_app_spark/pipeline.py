@@ -5,8 +5,15 @@ tables out.
 
 Differences from the reference's execution model, by design:
 
-- Lazy: every output table is a Spark DataFrame; nothing materializes
-  until a sink (or the caller) forces it.
+- Lazy, evaluated once: every output table is a Spark DataFrame marked
+  ``cache()``. Nothing runs until a sink (or the caller) acts on a
+  table; the first action materializes it, and every later sink of the
+  same run reads it from memory instead of re-aggregating. The output
+  caches, and the input cache of ``transform(cache=True)``, are tied to
+  the returned tables through ``functions.lifecycle``: they are freed
+  when the caller drops the tables or calls ``lifecycle.release`` on
+  one of them (release frees that table's cache and the shared input
+  cache; the other tables stay correct and recompute).
 - Single-scan aggregates: the reference loops one full-column scan per
   mapped brand column (app.py:398-428); selected_counts collapses each
   family into one conditional aggregate pass.
@@ -22,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bht_etl_app_spark.config import MappingConfig
+from bht_etl_app_spark.functions.lifecycle import carry, track_persisted
 from bht_etl_app_spark.operators import (
     brand_dictionary,
     crosstab_table,
@@ -47,10 +55,14 @@ class BhtPipeline:
 
     def transform(self, df: DataFrame, cache: bool = True) -> dict[str, DataFrame]:
         """Build every output table the mapping supports. Mirrors
-        app.py:478-531 table naming exactly."""
+        app.py:478-531 table naming exactly. With ``cache`` the input
+        is cached for as long as any returned table lives (unless the
+        caller cached it already)."""
         cfg = self.config
-        if cache:
+        input_owner = None
+        if cache and not df.is_cached:  # a caller's own cache stays theirs
             df = df.cache()
+            input_owner = track_persisted(_twin(df), df)
         out: dict[str, DataFrame] = {}
 
         # awareness (app.py:385-417)
@@ -93,15 +105,23 @@ class BhtPipeline:
 
         # full tabulation (app.py:519-531)
         out["tabulation"] = full_tabulation(df)
+        _cached(*out.values())
+        if input_owner is not None:
+            for table in out.values():
+                carry(table, input_owner)
         return out
 
     def crosstab(self, df: DataFrame, rows: str, cols: str, **kw) -> DataFrame:
         """6B advanced crosstab (app.py:555-561)."""
-        return crosstab_table(df, rows, cols, weight_col=self.weight_col, **kw)
+        table = crosstab_table(df, rows, cols, weight_col=self.weight_col, **kw)
+        _cached(table)
+        return table
 
     def multi_tabulation(self, df: DataFrame, dims: list[str], **kw) -> DataFrame:
         """6C multi-level tabulation, capped at 3 dims (app.py:570-572)."""
-        return multi_dim_tabulation(df, dims[:3], weight_col=self.weight_col, **kw)
+        table = multi_dim_tabulation(df, dims[:3], weight_col=self.weight_col, **kw)
+        _cached(table)
+        return table
 
     @staticmethod
     def nps_short_form(nps_df: DataFrame) -> DataFrame:
@@ -114,3 +134,32 @@ class BhtPipeline:
                 [("nps", None), ("n", 0.0)], "metric string, value double"
             )
         return nps_df
+
+
+def _twin(df: DataFrame) -> DataFrame:
+    """A second Python handle on ``df``'s Dataset. The lifecycle
+    finalizer must hold a frame other than the one it watches, or the
+    watched frame could never be collected."""
+    return DataFrame(df._jdf, df.sparkSession)
+
+
+# Unless this is true, Spark plans a cached query with AQE's final-stage
+# partition coalescing off: a cached 3-row aggregate would keep
+# spark.sql.shuffle.partitions partitions, and the parquet sink would
+# write that many part files where the uncached query writes one.
+_CACHED_PLAN_AQE = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+
+def _cached(*tables: DataFrame) -> None:
+    """Mark output tables ``cache()`` (lazy), planned with the same
+    partition coalescing as the uncached query, and free each cache
+    when its table is dropped or released. The session setting above
+    is switched on only while the caches are registered."""
+    conf = tables[0].sparkSession.conf
+    prev = conf.get(_CACHED_PLAN_AQE)
+    conf.set(_CACHED_PLAN_AQE, "true")
+    try:
+        for table in tables:
+            track_persisted(table.cache(), _twin(table))
+    finally:
+        conf.set(_CACHED_PLAN_AQE, prev)

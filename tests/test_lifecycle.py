@@ -26,7 +26,34 @@ def _emb(spark):
     return load_table(spark, SF, "embeddings").limit(300)
 
 
+_SURVEY_CFG = {
+    "awareness": {"tom": "tom_brand", "unaided": ["UA_Indomie", "UA_Sedaap"]},
+    "satisfaction": {"csat": "csat"},
+    "nps": {"score": "nps_score"},
+}
+
+
+def _survey_tables(spark):
+    """Every table BhtPipeline.transform builds (cached input, cached
+    outputs), plus a cached crosstab on the same input."""
+    from bht_etl_app_spark.pipeline import BhtPipeline
+
+    df = spark.createDataFrame(
+        [("Indomie", "1", "0", "5", "10", "M"), ("Sedaap", "", "1", "3", "6", "F"),
+         (None, "1", "1", None, "9", "F")],
+        "tom_brand string, UA_Indomie string, UA_Sedaap string, csat string, "
+        "nps_score string, gender string",
+    )
+    pipe = BhtPipeline(_SURVEY_CFG)
+    tables = pipe.transform(df)
+    tables["crosstab"] = pipe.crosstab(df, "gender", "tom_brand")
+    return tables
+
+
 CASES = {
+    # one table kept: the other outputs are dropped at once, and the
+    # shared input cache must live on until the kept table dies
+    "pipeline_transform": lambda spark: _survey_tables(spark)["tabulation"],
     "near_dup_incremental": lambda spark: __import__(
         "bht_etl_app_spark.operators.dedup", fromlist=["x"]
     ).near_dup_incremental(
@@ -205,5 +232,26 @@ def test_tracking_is_actually_exercised(spark):
     out.count()
     assert _n_persistent(spark) > 0
     del out
+    gc.collect()
+    assert _n_persistent(spark) == 0
+
+
+def test_pipeline_tables_free_every_cache_on_drop(spark):
+    """All of a pipeline run's caches (the input and one per output
+    table) are live while the tables are, and dropping the tables frees
+    them without clearCache()."""
+    from bht_etl_app_spark.functions.lifecycle import sweep_checkpoints
+
+    spark.catalog.clearCache()
+    sweep_checkpoints(spark.sparkContext)
+    gc.collect()
+    assert _n_persistent(spark) == 0
+
+    tables = _survey_tables(spark)
+    for t in tables.values():
+        t.count()
+    # the input plus every output table
+    assert _n_persistent(spark) == len(tables) + 1
+    del tables, t
     gc.collect()
     assert _n_persistent(spark) == 0

@@ -196,6 +196,113 @@ def test_excel_bundle_round_trip(spark, survey_sdf, tmp_path):
     assert list(read_xlsx(out)) == [long_name[:31]]
 
 
+def test_excel_bundle_sheet_name_collision(spark, tmp_path):
+    """Two table names that truncate to the same 31-char sheet name
+    raise a ValueError naming both tables, before any table runs (the
+    frames here fail if evaluated) and before the file is written."""
+    from bht_etl_app_spark.io import write_excel_bundle
+
+    boom = spark.range(1).selectExpr("raise_error('evaluated') AS x")
+    prefix = "a_table_name_longer_than_thirty_"
+    out = str(tmp_path / "bundle.xlsx")
+    with pytest.raises(ValueError, match=f"'{prefix}one' and '{prefix}two'"):
+        write_excel_bundle({prefix + "one": boom, prefix + "two": boom}, out)
+    assert not os.path.exists(out)
+
+
+def test_excel_bundle_row_cap(spark, survey_sdf, tmp_path):
+    """A row-cap violation inside a sink pool thread surfaces as the
+    same ValueError, and no workbook is written."""
+    from bht_etl_app_spark.io import write_excel_bundle
+
+    small = survey_sdf.groupBy("gender").count().limit(2)
+    out = str(tmp_path / "x.xlsx")
+    with pytest.raises(ValueError, match="table 'tab' exceeds the driver-side sink row cap"):
+        write_excel_bundle({"a": small, "tab": survey_sdf, "b": small}, out, row_cap=2)
+    assert not os.path.exists(out)
+
+
+def test_bundles_keep_table_order(spark, survey_sdf, tmp_path):
+    """The sinks run their tables concurrently, yet the JSON keys and
+    the Excel sheets follow the order of ``tables``, whichever query
+    finishes first."""
+    from bht_etl_app_spark.io import write_excel_bundle
+    from bht_etl_app_spark.io.minixlsx import read_xlsx
+
+    out = BhtPipeline(CFG).transform(survey_sdf)
+    names = ["tabulation", "nps_summary", "awareness_tom", "brand_dictionary",
+             "satisfaction_summary", "awareness_unaided"]
+    tables = {n: out[n] for n in names}
+    jp, xp = str(tmp_path / "b.json"), str(tmp_path / "b.xlsx")
+    write_json_bundle(tables, jp)
+    write_excel_bundle(tables, xp)
+    with open(jp) as f:
+        assert list(json.load(f)) == names
+    assert list(read_xlsx(xp)) == names
+
+
+def _sink_jobs(spark, group: str, sink) -> int:
+    """Jobs ``sink()`` ran, pool threads included, counted by job group
+    once the listener bus has delivered every job-start event."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        sink()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sinks_evaluate_each_table_once(spark, survey_sdf, tmp_path):
+    """The pipeline's tables are cached, so only the first sink runs
+    their queries; the Excel and parquet sinks read memory and run one
+    job per table. Before the outputs were cached, the three sinks ran
+    37 (JSON), 37 (Excel) and 39 (parquet) jobs on these 9 tables; the
+    JSON sink now runs 48, as filling a cache adds a job. The counts
+    also show that the sinks' pool threads carry the caller's job
+    group: jobs outside the group would not be counted."""
+    from bht_etl_app_spark.io import write_excel_bundle
+
+    pipe = BhtPipeline(CFG)
+    tables = pipe.transform(survey_sdf)
+    tables["crosstab_gender_age"] = pipe.crosstab(survey_sdf, "gender", "age_group")
+    run = f"sink-jobs-{os.getpid()}-{id(tables)}"
+    jobs = {
+        "json": _sink_jobs(spark, run + "-json", lambda: write_json_bundle(
+            tables, str(tmp_path / "b.json"))),
+        "excel": _sink_jobs(spark, run + "-excel", lambda: write_excel_bundle(
+            tables, str(tmp_path / "b.xlsx"))),
+        "parquet": _sink_jobs(spark, run + "-parquet", lambda: write_parquet_bundle(
+            tables, str(tmp_path / "pq"))),
+    }
+    assert jobs["json"] >= len(tables)
+    assert (jobs["excel"], jobs["parquet"]) == (9, 9)
+
+
+def test_survey_example_runs(spark, tmp_path, monkeypatch):
+    """examples/survey_end_to_end.py end to end, in-process on the
+    shared session: it writes the JSON bundle and one parquet directory
+    per table."""
+    import runpy
+    import sys
+
+    import bht_etl_app_spark
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = os.path.join(root, "examples", "survey_end_to_end.py")
+    monkeypatch.setattr(bht_etl_app_spark, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(sys, "argv", [script, str(tmp_path)])
+    runpy.run_path(script, run_name="__main__")
+
+    with open(tmp_path / "bundle.json") as f:
+        bundle = json.load(f)
+    assert "tabulation" in bundle and bundle["tabulation"]
+    for name in bundle:
+        assert os.path.isdir(tmp_path / "tables" / name)
+
+
 def test_apply_codebook_map_and_join_parity(spark, tmp_path):
     """VERDICT r1 item #7: the single-projection map-literal strategy
     and the per-column broadcast-join strategy must agree (including
