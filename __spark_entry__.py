@@ -2638,13 +2638,18 @@ def _overlap(*thunks):
     round-trips, and the trainings passed here share no inputs — so
     overlapping them changes no computation (each thunk's jobs,
     seeds, and rounding are untouched) while the idle cores back-fill
-    between collect rounds. Returns the thunk results in order."""
+    between collect rounds. Returns the thunk results in order. Each
+    thunk is wrapped with ``inheritable_thread_target`` at submit time,
+    so its jobs carry the caller's job group and local properties."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     if len(thunks) == 1:
         return [thunks[0]()]
+    spark = SparkSession.active()
     with ThreadPoolExecutor(max_workers=min(len(thunks), 4)) as pool:
-        futs = [pool.submit(t) for t in thunks]
+        futs = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
         return [f.result() for f in futs]
 
 

@@ -18,7 +18,7 @@ Layout:
   pipeline     — BhtPipeline facade (mapping config -> output tables)
 """
 
-from bht_etl_app_spark.session import get_spark
+from bht_etl_app_spark.session import get_spark, local_frame
 
-__all__ = ["get_spark"]
+__all__ = ["get_spark", "local_frame"]
 __version__ = "0.1.0"

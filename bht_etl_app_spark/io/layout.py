@@ -25,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bht_etl_app_spark.session import local_frame
+
 
 def write_partitioned(
     df: DataFrame,
@@ -240,7 +242,7 @@ def shard_manifest(spark, path: str):
             if f.endswith(".parquet"):
                 full = os.path.join(root, f)
                 sizes.append((os.path.relpath(full, abs_root), os.path.getsize(full)))
-    sdf = spark.createDataFrame(sizes, "rel_path string, n_bytes long")
+    sdf = local_frame(spark, sizes, "rel_path string, n_bytes long")
     rows = (
         spark.read.parquet(abs_root)
         .groupBy(F.input_file_name().alias("file"))

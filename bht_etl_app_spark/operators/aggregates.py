@@ -31,6 +31,7 @@ from bht_etl_app_spark.functions.exprs import (
     to_double,
     weight_expr,
 )
+from bht_etl_app_spark.session import local_frame
 
 
 def safe_value_counts(df: DataFrame, col: str) -> DataFrame:
@@ -248,7 +249,7 @@ def brand_dictionary(
     mapped column names (metadata). Output ``(group, brand)`` rows.
 
     The TOM side is a distinct() query; the column-name side is pure
-    driver metadata turned into literal rows — no job.
+    driver metadata turned into literal rows (``local_frame``) — no job.
     """
     spark = df.sparkSession
     parts = []
@@ -266,9 +267,9 @@ def brand_dictionary(
         for b in brands_from_binary_columns(cols):
             rows.append((group, b))
     if rows:
-        parts.append(spark.createDataFrame(rows, "group string, brand string"))
+        parts.append(local_frame(spark, rows, "group string, brand string"))
     if not parts:
-        return spark.createDataFrame([], "group string, brand string")
+        return local_frame(spark, [], "group string, brand string")
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

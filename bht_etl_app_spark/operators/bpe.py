@@ -48,7 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bht_etl_app_spark.operators.text import tokens_expr
-from bht_etl_app_spark.session import ensure_min_parallelism
+from bht_etl_app_spark.session import ensure_min_parallelism, local_frame
 
 __all__ = [
     "word_counts",
@@ -159,8 +159,8 @@ def bpe_train(
                 F.lit(_S1 + a + b + _S2),
             ),
         )
-    merges_df = spark.createDataFrame(
-        merges, "rank int, lhs string, rhs string, freq long"
+    merges_df = local_frame(
+        spark, merges, "rank int, lhs string, rhs string, freq long"
     )
     # token count = number of symbol-open sentinels left in s;
     # pieces = the human-readable segmentation ("\x01a\x02\x01b\x02"

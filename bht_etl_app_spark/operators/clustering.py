@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bht_etl_app_spark.session import ensure_min_parallelism
+from bht_etl_app_spark.session import ensure_min_parallelism, local_frame
 
 
 def _l2_scores_expr(vec: Column, centroids: list[list[float]]) -> Column:
@@ -138,7 +138,11 @@ def kmeans_fit(
         # parameter the plan/generated code is IDENTICAL across rounds
         # — compile once, iterate cheap. (Scores get their own
         # projection: _argmax_expr references the array twice, see
-        # PERFORMANCE.md multi-reference rule.)
+        # PERFORMANCE.md multi-reference rule.) The frame comes from
+        # ``local_frame``, a LocalRelation: building it runs no job, and
+        # its broadcast is a one-task JVM job per round, where a
+        # parallelized Python list was a Python-worker job of one task
+        # per core.
         #
         # The score expression references only column NAMES, so the
         # Column tree is built ONCE here and reused every round —
@@ -153,7 +157,8 @@ def kmeans_fit(
             ),
         )
         for _ in range(max_iter):
-            cdf = spark.createDataFrame(
+            cdf = local_frame(
+                spark,
                 [(centroids, [0.5 * sum(x * x for x in c) for c in centroids])],
                 "mat array<array<double>>, bias array<double>",
             )
@@ -418,7 +423,8 @@ def kcenter_select(
             (top[id_col], [int(x) for x in top["qvec"]], int(top["mind"]))
         )
     spark = emb.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (r + 1, pid, dist)
             for r, (pid, _, dist) in enumerate(picked)

@@ -40,7 +40,7 @@ from bht_etl_app_spark.operators.text import (
     repetition_signals,
     tokens_expr,
 )
-from bht_etl_app_spark.session import ensure_min_parallelism
+from bht_etl_app_spark.session import ensure_min_parallelism, local_frame
 
 
 def decontaminate(
@@ -161,7 +161,7 @@ def bloom_decontaminate(
         words[pp >> 6] |= 1 << (pp & 63)
     words = [w - (1 << 64) if w >= 1 << 63 else w for w in words]
     spark = train.sparkSession
-    bloom = spark.createDataFrame([(words,)], "__bloom__ array<long>")
+    bloom = local_frame(spark, [(words,)], "__bloom__ array<long>")
 
     tr = (
         ensure_min_parallelism(train)
@@ -735,7 +735,8 @@ def vocab_coverage(
         offsets.append((r["__b__"], row_acc, mass_acc))
         row_acc += r["n"]
         mass_acc += r["mass"]
-    odf = spark.createDataFrame(
+    odf = local_frame(
+        spark,
         offsets or [(0, 0, 0)], "__b__ int, __row_off__ long, __mass_off__ long"
     )
     w = Window.partitionBy("__b__").orderBy(F.desc("count"), F.asc("token"))

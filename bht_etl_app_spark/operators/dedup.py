@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from bht_etl_app_spark.functions.lifecycle import track_persisted
 from bht_etl_app_spark.operators.text import tokens_expr
-from bht_etl_app_spark.session import ensure_min_parallelism
+from bht_etl_app_spark.session import ensure_min_parallelism, local_frame
 
 
 def _norm_text(col: str) -> Column:
@@ -1076,7 +1076,8 @@ def dedup_clusters(
             if root not in comp_min or node < comp_min[root]:
                 comp_min[root] = node
         id_type = dict(pairs.dtypes)[id_a]
-        out = spark.createDataFrame(
+        out = local_frame(
+            spark,
             [(node, comp_min[find(node)]) for node in sorted(parent)],
             f"doc_id {id_type}, cluster_id {id_type}",
         )

@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bht_etl_app_spark.session import local_frame
+
 __all__ = [
     "pagerank",
     "cluster_representatives",
@@ -90,7 +92,7 @@ def pagerank(
         sym.unpersist()
         edges.unpersist()
         spark = pairs.sparkSession
-        return spark.createDataFrame([], "id long, rank double")
+        return local_frame(spark, [], "id long, rank double")
     base = (1.0 - damping) / n
     ranks = deg.select("src", F.lit(1.0 / n).alias("rank"))
     for _ in range(num_iters):
@@ -254,7 +256,7 @@ def triangle_stats(
     """
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
+    from pyspark import StorageLevel, inheritable_thread_target
 
     # Materialize-or-recompute (r12 optimization): this operator runs
     # FOUR actions (triangles, nodes, edges, wedge power sum), and
@@ -306,33 +308,35 @@ def triangle_stats(
     # materialize e then deg once (these two actions ARE two of the
     # four outputs), then overlap the remaining independent jobs from
     # a driver thread pool (guide §2.6) — the wedge join's straggler
-    # tail backfills with the trivial power-sum aggregate
+    # tail backfills with the trivial power-sum aggregate; each task
+    # is wrapped at submit time so its job keeps the caller's job group
     edges = e.count()
     nodes = deg.count()
+    spark = pairs.sparkSession
     with ThreadPoolExecutor(max_workers=2) as pool:
         # left-semi keeps every matched wedge row (one per CENTER
         # vertex — distinct centers are distinct triangles; semi join
         # preserves left multiplicity, it only collapses the build
         # side)
-        f_tri = pool.submit(
+        f_tri = pool.submit(inheritable_thread_target(spark)(
             cands.join(o.select("src", "dst"), ["src", "dst"], "left_semi").count
-        )
-        f_wedges = pool.submit(
+        ))
+        f_wedges = pool.submit(inheritable_thread_target(spark)(
             deg.agg(
                 F.sum(
                     F.col("deg").cast("decimal(38,0)")
                     * (F.col("deg") - 1).cast("decimal(38,0)")
                 ).alias("w2x")
             ).head
-        )
+        ))
         tri = f_tri.result()
         wedges_row = f_wedges.result()
     for cached in (o, deg, e):
         cached.unpersist()
     wedges = int(wedges_row["w2x"]) // 2 if wedges_row["w2x"] is not None else 0
     coeff = (3.0 * float(tri) / float(wedges)) if wedges > 0 else None
-    spark = pairs.sparkSession
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(nodes, edges, int(tri), wedges, coeff)],
         "n_nodes long, n_edges long, n_triangles long, n_wedges long,"
         " global_clustering double",

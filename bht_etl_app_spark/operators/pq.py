@@ -110,8 +110,12 @@ def pq_train(
     computation (seeds, per-round 9 dp quantization, convergence)
     bit-identical while the cluster back-fills the idle capacity
     between collect rounds. Spark's scheduler runs concurrent jobs
-    FIFO; correctness does not depend on ordering."""
+    FIFO; correctness does not depend on ordering. Each fit is wrapped
+    with ``inheritable_thread_target`` at submit time, so its jobs
+    carry the caller's job group and local properties."""
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark import inheritable_thread_target
 
     from .clustering import kmeans_fit
 
@@ -131,7 +135,11 @@ def pq_train(
     if m == 1:
         return [_fit(0)]
     with ThreadPoolExecutor(max_workers=min(m, 4)) as pool:
-        return list(pool.map(_fit, range(m)))
+        futs = [
+            pool.submit(inheritable_thread_target(emb.sparkSession)(_fit), s)
+            for s in range(m)
+        ]
+        return [f.result() for f in futs]
 
 
 def pq_encode(

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from bht_etl_app_spark.session import ensure_min_parallelism
+from bht_etl_app_spark.session import ensure_min_parallelism, local_frame
 
 
 def _id_hash(id_col: str) -> Column:
@@ -443,7 +443,7 @@ def training_order(
     for r in counts:
         offsets.append((r["__bucket__"], acc))
         acc += r["count"]
-    odf = spark.createDataFrame(offsets, "__bucket__ int, __off__ long")
+    odf = local_frame(spark, offsets, "__bucket__ int, __off__ long")
     w = Window.partitionBy("__bucket__").orderBy("__key__")
     return (
         base.join(F.broadcast(odf), "__bucket__")

@@ -40,6 +40,7 @@ from bht_etl_app_spark.operators import (
     satisfaction_table,
     selected_counts,
 )
+from bht_etl_app_spark.session import local_frame
 
 
 class BhtPipeline:
@@ -130,8 +131,8 @@ class BhtPipeline:
         rows = {r["metric"]: r["value"] for r in nps_df.collect()}
         spark = nps_df.sparkSession
         if rows.get("n") == 0.0:
-            return spark.createDataFrame(
-                [("nps", None), ("n", 0.0)], "metric string, value double"
+            return local_frame(
+                spark, [("nps", None), ("n", 0.0)], "metric string, value double"
             )
         return nps_df
 

@@ -13,6 +13,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bht_etl_app_spark.session import local_frame
+
 
 def _dec(col: str):
     return F.col(col).cast("decimal(18,2)")
@@ -394,8 +396,8 @@ def funnel_conversion(
         (i, s, counts[i], round(100.0 * counts[i] / base, 6))
         for i, s in enumerate(steps)
     ]
-    return spark.createDataFrame(
-        rows, "step_idx long, step string, n_users long, pct_of_first double"
+    return local_frame(
+        spark, rows, "step_idx long, step string, n_users long, pct_of_first double"
     )
 
 
@@ -974,8 +976,8 @@ def customer_gini(orders: DataFrame, n_buckets: int = 32) -> DataFrame:
     for r in counts:
         offsets.append((r["__b__"], acc))
         acc += r["count"]
-    odf = orders.sparkSession.createDataFrame(
-        offsets, "__b__ int, __off__ long"
+    odf = local_frame(
+        orders.sparkSession, offsets, "__b__ int, __off__ long"
     )
     w = Window.partitionBy("__b__").orderBy(F.asc("__x__"), F.asc("o_custkey"))
     ranked = bucketed.join(F.broadcast(odf), "__b__").select(
@@ -2049,13 +2051,14 @@ def part_abc_classes(lineitem: DataFrame, n_buckets: int = 32) -> DataFrame:
         # EMPTY input only — a zero-sum but non-empty part list still
         # classifies (everything lands in A: 0 ≤ 0), matching the
         # oracle's direct-window replay (review finding)
-        return lineitem.sparkSession.createDataFrame(
+        return local_frame(
+            lineitem.sparkSession,
             [],
             "abc_class string, n_parts long, revenue double,"
             " revenue_share double",
         )
-    odf = lineitem.sparkSession.createDataFrame(
-        offsets, "__b__ int, __roff__ string"
+    odf = local_frame(
+        lineitem.sparkSession, offsets, "__b__ int, __roff__ string"
     ).select("__b__", F.col("__roff__").cast("decimal(38,2)").alias("__roff__"))
     w = Window.partitionBy("__b__").orderBy(
         F.desc("__x__"), F.asc("l_partkey")
@@ -2767,7 +2770,8 @@ def topk_customer_overlap(
     n_ov = len(ids1 & ids2)
     union = n1 + n2 - n_ov
     jac = round(n_ov / union, 12) if union > 0 else None
-    return orders.sparkSession.createDataFrame(
+    return local_frame(
+        orders.sparkSession,
         [(int(k), n1, n2, n_ov, jac)],
         "k long, n_p1 long, n_p2 long, n_overlap long, jaccard double",
     )

@@ -31,6 +31,7 @@ from bht_etl_app_spark.operators.timeseries import (
     range_join_recent,
     session_stats,
 )
+from bht_etl_app_spark.session import local_frame
 
 
 def _dec(col: str):
@@ -515,7 +516,8 @@ def order_price_deciles(orders: DataFrame, num_buckets: int | None = None) -> Da
         p = r["o_orderpriority"]
         rows.append([p, r["__b__"], acc.get(p, 0)])
         acc[p] = acc.get(p, 0) + r["count"]
-    odf = spark.createDataFrame(
+    odf = local_frame(
+        spark,
         [(p, b, off, acc[p]) for p, b, off in rows],
         "__p__ string, __ob__ int, __off__ long, __n__ long",
     )

@@ -12,8 +12,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def get_spark(
@@ -33,6 +34,10 @@ def get_spark(
       columnar batches, not row-by-row pickles.
     - Broadcast threshold 64 MB: dimension tables (region/nation/codebook)
       always broadcast; fact-fact joins still sort-merge.
+    - Codegen cache of 1000 classes: the engine is run by re-running the
+      same queries, and Spark's default cache (100 generated classes) is
+      smaller than one such run, so every rerun compiled its classes
+      again. At 1000 a rerun reuses them.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
@@ -53,6 +58,11 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
+        # compiled classes kept across queries. One perfbench pass
+        # compiles ~330 (fixture_queries) / ~170 (survey_etl) classes;
+        # at the default of 100 every warm pass compiled ~330 / ~160 of
+        # them again, at 1000 a warm pass compiles 0-4
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.extraJavaOptions", "-Duser.timezone=UTC")
         .config("spark.executor.extraJavaOptions", "-Duser.timezone=UTC")
     )
@@ -124,6 +134,55 @@ def _nano_timestamp_cols(path: str) -> list[str]:
 
 def load_tables(spark: SparkSession, sf_dir: str, names=FIXTURE_TABLES):
     return {n: load_table(spark, sf_dir, n) for n in names}
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """A DataFrame over driver-local ``rows`` (tuples or lists, one
+    value per column) with ``schema`` (a DDL string or a StructType).
+
+    ``spark.createDataFrame(<list>, schema)`` parallelizes pickled rows,
+    so reading the frame needs Python workers to unpickle a handful of
+    rows: collecting or broadcasting it on its own is a Python-worker
+    job of one task per core. Here the rows go to the JVM as one Arrow
+    table, which Spark plans as a ``LocalRelation``: collecting the
+    frame runs no job, and broadcasting it is a one-task JVM job. Zero
+    rows give the typed empty frame.
+
+    A row of the wrong width, or ``None`` in a non-nullable column,
+    raises ``ValueError``; a value Arrow cannot convert to its column's
+    type raises ``TypeError``. Both name the schema and the column.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    struct = schema if isinstance(schema, StructType) else spark._parse_ddl(schema)
+    if not isinstance(struct, StructType):
+        raise TypeError(f"local_frame: schema {schema!r} is not a struct")
+    fields = struct.fields
+    rows = [tuple(r) for r in rows]
+    for i, r in enumerate(rows):
+        if len(r) != len(fields):
+            raise ValueError(
+                f"local_frame: row {i} has {len(r)} values but schema "
+                f"{struct.simpleString()} has {len(fields)} columns"
+            )
+    columns = list(zip(*rows)) if rows else [()] * len(fields)
+    arrays = []
+    for f, values in zip(fields, columns):
+        if not f.nullable and None in values:
+            raise ValueError(
+                f"local_frame: column {f.name!r} of schema "
+                f"{struct.simpleString()} is not nullable but holds None"
+            )
+        try:
+            arrays.append(pa.array(values, type=to_arrow_type(f.dataType)))
+        except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError, TypeError) as e:
+            raise TypeError(
+                f"local_frame: column {f.name!r} of schema "
+                f"{struct.simpleString()}: {e}"
+            ) from e
+    table = pa.Table.from_arrays(arrays, names=struct.names)
+    return spark.createDataFrame(table, struct)
 
 
 def _source_parallelism(plan) -> int | None:

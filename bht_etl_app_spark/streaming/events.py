@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from bht_etl_app_spark.session import local_frame
+
 EVENTS_STREAM_SCHEMA = StructType([
     StructField("event_id", LongType()),
     StructField("ts", TimestampType()),
@@ -488,7 +490,7 @@ def ingest_dedup_batch(
             F.col("batch_id") != batch_id
         ).select(*cols)
     else:
-        history = spark.createDataFrame([], batch_df.schema)
+        history = local_frame(spark, [], batch_df.schema)
     history_bands = None
     if band_index_table is not None and spark.catalog.tableExists(band_index_table):
         history_bands = (
@@ -631,7 +633,7 @@ def ingest_curate_batch(
             F.col("batch_id") != batch_id
         ).select(*cols)
     else:
-        history = spark.createDataFrame([], batch_df.schema)
+        history = local_frame(spark, [], batch_df.schema)
 
     # 1. quality (batch-local: the rules are per-document)
     qdec = quality_filter_decisions(batch_df, min_tokens=min_tokens)

@@ -71,6 +71,25 @@ def assert_frames_equal(spark_df, pdf_expected, sort_by=None, check_dtype=False)
     pd.testing.assert_frame_equal(got, exp, check_dtype=check_dtype, check_exact=False, rtol=1e-9)
 
 
+def jobs_in_group(spark, group, fn):
+    """``(jobs fn() ran in job group group, jobs the session started
+    meanwhile)``. Job ids are handed out in order, so the second number
+    counts every job of the call, pool threads included; the first
+    counts those that carried the caller's job group."""
+    sc = spark.sparkContext
+    scheduler = sc._jsc.sc().dagScheduler()
+    before = scheduler.nextJobId()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    started = scheduler.nextJobId() - before
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), started
+
+
 def duckdb_oracle_rows(sql, sf_dir, tables=("documents",)):
     """Run an oracle SQL string against the parquet fixtures the way
     the driver gate does (tables pre-registered as views). Returns

@@ -18,7 +18,7 @@ from bht_etl_app_spark.io import (
 )
 from bht_etl_app_spark.pipeline import BhtPipeline
 from tests import pandas_ref as ref
-from tests.conftest import assert_frames_equal
+from tests.conftest import assert_frames_equal, jobs_in_group
 
 CFG = {
     "respondent_id": "resp_id",
@@ -241,28 +241,14 @@ def test_bundles_keep_table_order(spark, survey_sdf, tmp_path):
     assert list(read_xlsx(xp)) == names
 
 
-def _sink_jobs(spark, group: str, sink) -> int:
-    """Jobs ``sink()`` ran, pool threads included, counted by job group
-    once the listener bus has delivered every job-start event."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        sink()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_sinks_evaluate_each_table_once(spark, survey_sdf, tmp_path):
     """The pipeline's tables are cached, so only the first sink runs
     their queries; the Excel and parquet sinks read memory and run one
     job per table. Before the outputs were cached, the three sinks ran
     37 (JSON), 37 (Excel) and 39 (parquet) jobs on these 9 tables; the
-    JSON sink now runs 48, as filling a cache adds a job. The counts
-    also show that the sinks' pool threads carry the caller's job
-    group: jobs outside the group would not be counted."""
+    JSON sink now runs 48, as filling a cache adds a job. Every job a
+    sink started is in the caller's job group, so the sinks' pool
+    threads carry it."""
     from bht_etl_app_spark.io import write_excel_bundle
 
     pipe = BhtPipeline(CFG)
@@ -270,15 +256,17 @@ def test_sinks_evaluate_each_table_once(spark, survey_sdf, tmp_path):
     tables["crosstab_gender_age"] = pipe.crosstab(survey_sdf, "gender", "age_group")
     run = f"sink-jobs-{os.getpid()}-{id(tables)}"
     jobs = {
-        "json": _sink_jobs(spark, run + "-json", lambda: write_json_bundle(
+        "json": jobs_in_group(spark, run + "-json", lambda: write_json_bundle(
             tables, str(tmp_path / "b.json"))),
-        "excel": _sink_jobs(spark, run + "-excel", lambda: write_excel_bundle(
+        "excel": jobs_in_group(spark, run + "-excel", lambda: write_excel_bundle(
             tables, str(tmp_path / "b.xlsx"))),
-        "parquet": _sink_jobs(spark, run + "-parquet", lambda: write_parquet_bundle(
+        "parquet": jobs_in_group(spark, run + "-parquet", lambda: write_parquet_bundle(
             tables, str(tmp_path / "pq"))),
     }
-    assert jobs["json"] >= len(tables)
-    assert (jobs["excel"], jobs["parquet"]) == (9, 9)
+    for in_group, started in jobs.values():
+        assert in_group == started
+    assert jobs["json"][0] >= len(tables)
+    assert (jobs["excel"][0], jobs["parquet"][0]) == (9, 9)
 
 
 def test_survey_example_runs(spark, tmp_path, monkeypatch):

@@ -1,6 +1,7 @@
 """Tests for similarity search: exact knn, knn join, LSH bucketing."""
 
 import math
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -237,6 +238,20 @@ def test_pq_encode_codes_bounded_and_deterministic(spark, emb_sdf):
     for codes in c1.values():
         assert len(codes) == 2
         assert all(0 <= c < 8 for c in codes)
+
+
+def test_pq_train_jobs_keep_the_callers_job_group(spark, emb_sdf):
+    """The m subspace fits run in a driver thread pool; every job they
+    start carries the caller's job group."""
+    from bht_etl_app_spark.operators.pq import pq_train
+    from tests.conftest import jobs_in_group
+
+    group = f"pq-train-{os.getpid()}"
+    in_group, started = jobs_in_group(
+        spark, group, lambda: pq_train(emb_sdf, m=2, k=8, max_iter=2)
+    )
+    assert started > 2
+    assert in_group == started
 
 
 def test_pq_adc_self_distance_is_minimal(spark, emb_sdf):
